@@ -31,6 +31,7 @@ the view's row set is exactly ``SELECT group_cols FROM source GROUP BY``.
 
 from __future__ import annotations
 
+import contextlib
 import json
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,8 +39,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .commitstore import CommitStore
-from .icebox import IceboxTable
-from .sigindex import IncrementalIndex
+from .icebox import IceboxTable, persisted
+from .sigindex import ChangeFeed, IncrementalIndex
 
 _META_NAME = "aggview.json"
 _GK = "_gk"
@@ -274,7 +275,11 @@ class AggView(IncrementalIndex):
         self.table.refresh()
 
     def refresh_from(
-        self, src_table: IceboxTable, *, consumer: str = "aggview"
+        self,
+        src_table: IceboxTable,
+        *,
+        consumer: str = "aggview",
+        feed: ChangeFeed | None = None,
     ) -> dict:
         """Fold the source's changes since the last sync into the view.
 
@@ -282,7 +287,9 @@ class AggView(IncrementalIndex):
         plus a source re-aggregate ONLY of groups where a retracted value
         ties the stored extremum (the one case min/max cannot be updated
         monotonically). Exactly-once: the MERGE batch id is the (from, to)
-        snapshot pair, so a crash-replay of the same window is fenced."""
+        snapshot pair, so a crash-replay of the same window is fenced.
+        ``feed``: an already-read change feed of ``src_table`` (see
+        ``IncrementalIndex._window``)."""
         # refresh the source handle FIRST: the widening check must see the
         # schema the window's CDF will be read at — validating against a
         # stale handle would miss a widening committed inside the window
@@ -290,7 +297,9 @@ class AggView(IncrementalIndex):
         # values (the exact corruption _evolve_with_source exists to stop)
         src_table.refresh()
         self._evolve_with_source(src_table)
-        from_sid, to_sid, ch = self._window(src_table, consumer=consumer, mode="cdf")
+        from_sid, to_sid, ch = self._window(
+            src_table, consumer=consumer, mode="cdf", feed=feed
+        )
         if ch is None:
             return {"skipped": True, "from_snapshot": from_sid, "to_snapshot": to_sid}
         gcols = self.group_cols
@@ -314,97 +323,99 @@ class AggView(IncrementalIndex):
               if f.name not in (_GK, _N, *gcols)],
         )
         j = delta.join(stored_ren, _GK, "left")
-
-        minmax = self._minmax_specs()
-        if minmax:
-            # re-aggregate only groups where a retraction ties the stored
-            # extremum (monotone update is unsound exactly there); in the
-            # common no-tie refresh the source table is never scanned —
-            # the isEmpty probe is O(dirty groups), and the plan with it
-            # false carries no source read at all
-            hit = F.lit(False)
-            for out, (kind, col) in minmax.items():
-                hit = hit | (
-                    F.col(f"_cur_{out}").isNotNull()
-                    & (F.col(f"_retr_{out}") == F.col(f"_cur_{out}"))
-                )
-            j = j.withColumn("_reagged", hit)
-            need = j.where(hit).select(_GK)
-            if need.isEmpty():
+        # DataFrames persisted for this refresh (released on any exit):
+        # each is evaluated by more than one Spark action below
+        with contextlib.ExitStack() as held:
+            minmax = self._minmax_specs()
+            if minmax:
+                # re-aggregate only groups where a retraction ties the stored
+                # extremum (monotone update is unsound exactly there); in the
+                # common no-tie refresh the source table is never scanned —
+                # the isEmpty probe is O(dirty groups), and the plan with it
+                # false carries no source read at all
+                hit = F.lit(False)
                 for out, (kind, col) in minmax.items():
-                    j = j.withColumn(
-                        f"_true_{out}",
-                        F.lit(None).cast(src_table.schema[col].dataType),
+                    hit = hit | (
+                        F.col(f"_cur_{out}").isNotNull()
+                        & (F.col(f"_retr_{out}") == F.col(f"_cur_{out}"))
                     )
-            else:
-                src_state = src_table.read(to_sid)
-                reagg = (
-                    src_state.select(
-                        _gk_expr(gcols), *{c for _, (_, c) in minmax.items()}
+                j = held.enter_context(persisted(j.withColumn("_reagged", hit)))
+                need = j.where(hit).select(_GK)
+                if need.isEmpty():
+                    for out, (kind, col) in minmax.items():
+                        j = j.withColumn(
+                            f"_true_{out}",
+                            F.lit(None).cast(src_table.schema[col].dataType),
+                        )
+                else:
+                    src_state = src_table.read(to_sid)
+                    reagg = (
+                        src_state.select(
+                            _gk_expr(gcols), *{c for _, (_, c) in minmax.items()}
+                        )
+                        .join(need, _GK, "semi")
+                        .groupBy(_GK)
+                        .agg(*[
+                            (F.min(col) if kind == "min" else F.max(col))
+                            .alias(f"_true_{out}")
+                            for out, (kind, col) in minmax.items()
+                        ])
                     )
-                    .join(need, _GK, "semi")
-                    .groupBy(_GK)
-                    .agg(*[
-                        (F.min(col) if kind == "min" else F.max(col))
-                        .alias(f"_true_{out}")
-                        for out, (kind, col) in minmax.items()
-                    ])
-                )
-                j = j.join(reagg, _GK, "left")
+                    j = j.join(reagg, _GK, "left")
 
-        new_n = F.coalesce(F.col("_cur__live"), F.lit(0)) + F.col("_d__live")
-        vals = {_N: new_n}
-        for out, (kind, col) in self.aggs.items():
-            if kind in ("count", "sum"):
-                vals[out] = (
-                    F.coalesce(F.col(f"_cur_{out}"), F.lit(0))
-                    + F.coalesce(F.col(f"_d_{out}"), F.lit(0))
-                ).cast(self.table.schema[out].dataType)
-                if kind == "sum":
-                    vals[f"_sumcnt_{out}"] = (
-                        F.coalesce(F.col(f"_cur__sumcnt_{out}"), F.lit(0))
-                        + F.coalesce(F.col(f"_d__sumcnt_{out}"), F.lit(0))
+            new_n = F.coalesce(F.col("_cur__live"), F.lit(0)) + F.col("_d__live")
+            vals = {_N: new_n}
+            for out, (kind, col) in self.aggs.items():
+                if kind in ("count", "sum"):
+                    vals[out] = (
+                        F.coalesce(F.col(f"_cur_{out}"), F.lit(0))
+                        + F.coalesce(F.col(f"_d_{out}"), F.lit(0))
+                    ).cast(self.table.schema[out].dataType)
+                    if kind == "sum":
+                        vals[f"_sumcnt_{out}"] = (
+                            F.coalesce(F.col(f"_cur__sumcnt_{out}"), F.lit(0))
+                            + F.coalesce(F.col(f"_d__sumcnt_{out}"), F.lit(0))
+                        )
+                elif kind == "avg":
+                    vals[f"_avgsum_{out}"] = (
+                        F.coalesce(F.col(f"_cur__avgsum_{out}"), F.lit(0.0))
+                        + F.coalesce(F.col(f"_d__avgsum_{out}"), F.lit(0.0))
                     )
-            elif kind == "avg":
-                vals[f"_avgsum_{out}"] = (
-                    F.coalesce(F.col(f"_cur__avgsum_{out}"), F.lit(0.0))
-                    + F.coalesce(F.col(f"_d__avgsum_{out}"), F.lit(0.0))
-                )
-                vals[f"_avgcnt_{out}"] = (
-                    F.coalesce(F.col(f"_cur__avgcnt_{out}"), F.lit(0))
-                    + F.coalesce(F.col(f"_d__avgcnt_{out}"), F.lit(0))
-                )
-            else:  # min / max
-                least_or_greatest = F.least if kind == "min" else F.greatest
-                mono = least_or_greatest(F.col(f"_cur_{out}"), F.col(f"_post_{out}"))
-                if minmax:
-                    vals[out] = F.when(
-                        F.col("_reagged"), F.col(f"_true_{out}")
-                    ).otherwise(mono)
-                else:  # unreachable, kept for clarity
-                    vals[out] = mono
-        payload_cols = [f.name for f in self.table.schema.fields if f.name != _GK]
-        rows = j.select(
-            _GK, *gcols, *[vals[c].alias(c) for c in payload_cols if c not in gcols]
-        )
-        ups = rows.where(F.col(_N) > 0).select(
-            F.lit("upsert").alias("_change"), _GK, *payload_cols,
-            F.lit(to_sid).cast("long").alias("_seq"),
-        )
-        nulls = [
-            F.lit(None).cast(self.table.schema[c].dataType).alias(c)
-            for c in payload_cols
-        ]
-        dels = rows.where(F.col(_N) <= 0).select(
-            F.lit("delete").alias("_change"), _GK, *nulls,
-            F.lit(to_sid).cast("long").alias("_seq"),
-        )
-        m = self.table.merge(
-            ups.unionByName(dels),
-            batch_id=f"{consumer}:{from_sid}->{to_sid}",
-            seq_col="_seq", op_col="_change", delete_value="delete",
-            fence=False, tombstones=True, mor=None,
-        )
+                    vals[f"_avgcnt_{out}"] = (
+                        F.coalesce(F.col(f"_cur__avgcnt_{out}"), F.lit(0))
+                        + F.coalesce(F.col(f"_d__avgcnt_{out}"), F.lit(0))
+                    )
+                else:  # min / max
+                    least_or_greatest = F.least if kind == "min" else F.greatest
+                    mono = least_or_greatest(F.col(f"_cur_{out}"), F.col(f"_post_{out}"))
+                    if minmax:
+                        vals[out] = F.when(
+                            F.col("_reagged"), F.col(f"_true_{out}")
+                        ).otherwise(mono)
+                    else:  # unreachable, kept for clarity
+                        vals[out] = mono
+            payload_cols = [f.name for f in self.table.schema.fields if f.name != _GK]
+            rows = j.select(
+                _GK, *gcols, *[vals[c].alias(c) for c in payload_cols if c not in gcols]
+            )
+            ups = rows.where(F.col(_N) > 0).select(
+                F.lit("upsert").alias("_change"), _GK, *payload_cols,
+                F.lit(to_sid).cast("long").alias("_seq"),
+            )
+            nulls = [
+                F.lit(None).cast(self.table.schema[c].dataType).alias(c)
+                for c in payload_cols
+            ]
+            dels = rows.where(F.col(_N) <= 0).select(
+                F.lit("delete").alias("_change"), _GK, *nulls,
+                F.lit(to_sid).cast("long").alias("_seq"),
+            )
+            m = self.table.merge(
+                held.enter_context(persisted(ups.unionByName(dels))),
+                batch_id=f"{consumer}:{from_sid}->{to_sid}",
+                seq_col="_seq", op_col="_change", delete_value="delete",
+                fence=False, tombstones=True, mor=None,
+            )
         self._advance(src_table, consumer, from_sid, to_sid)
         m = self._compact_if_needed(m)
         return {**m, "from_snapshot": from_sid, "to_snapshot": to_sid}

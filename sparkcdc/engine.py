@@ -13,6 +13,7 @@ snapshot and re-applies only uncommitted ranges; re-commits are no-ops.
 
 from __future__ import annotations
 
+import contextlib
 import datetime
 import os
 import time
@@ -23,7 +24,7 @@ from pyspark.sql import types as T
 
 from .changelog import max_seq, scan_slice
 from .config import ConfigError, JobConfig
-from .icebox import IceboxTable
+from .icebox import IceboxTable, persisted
 from .metrics import MetricsLog
 from .schema_infer import detect_evolution
 
@@ -333,8 +334,11 @@ class CDCEngine:
         file-pruned either way) plus N-1 redundant job-scheduling
         round-trips. ``plan_batches`` ranges are the contiguous uniform
         grid ``(lo0 + i*b, lo0 + (i+1)*b]``, so each event's batch index
-        is integer arithmetic on its LSN — one groupBy (batch, bucket)
-        replaces N groupBy (bucket) jobs.
+        is ``ceil((seq - lo0) / b) - 1`` — the batch ``scan_slice`` puts
+        it in, fractional LSNs included — and one groupBy (batch,
+        bucket) replaces N groupBy (bucket) jobs. An index outside the
+        plan means the grid assumption broke: it raises rather than
+        crediting the stats to some other batch.
 
         The rows feed ``IceboxTable.merge(probe_stats=...)``, which
         re-validates equivalence (fence ≤ lo, unchanged bucket layout)
@@ -356,8 +360,8 @@ class CDCEngine:
 
         key, nb = self.table.key, self.table.n_buckets
         lo0, b = plan[0][0], self.cfg.batch_size
-        idx = F.floor(
-            (F.col(self.cfg.seq_col).cast("long") - F.lit(lo0) - 1) / F.lit(b)
+        idx = (
+            F.ceil((F.col(self.cfg.seq_col) - F.lit(lo0)) / F.lit(b)) - 1
         ).cast("int")
         aggs = [F.count("*").alias("n"), F.max(self.cfg.seq_col).alias("mx")]
         has_ts = bool(self.cfg.ts_col) and self.cfg.ts_col in df.columns
@@ -372,10 +376,18 @@ class CDCEngine:
             rng: {"lo": rng[0], "nb": nb, "key": key, "rows": []} for rng in plan
         }
         for r in rows:
+            i = int(r["_i"])
+            if not 0 <= i < len(plan):
+                raise ValueError(
+                    f"probe prefetch: events in bucket {r['_bucket']} fall in "
+                    f"batch {i} of a {len(plan)}-batch plan (grid from LSN "
+                    f"{lo0}, width {b}) — the plan is not the uniform grid "
+                    f"the prefetch assumes"
+                )
             entry = {"_bucket": r["_bucket"], "n": r["n"], "mx": r["mx"]}
             if has_ts:
                 entry["mts"] = r["mts"]
-            out[plan[int(r["_i"])]]["rows"].append(entry)
+            out[plan[i]]["rows"].append(entry)
         return out
 
     # ---------------- evolution ----------------
@@ -727,6 +739,109 @@ class CDCEngine:
         }
         return self.metrics.emit(rec)
 
+    def _refresh_derived(self) -> None:
+        """Fold the latest commit into every bound derived table — O(batch),
+        exactly-once per table (each merges under its own ``consumer:
+        from->to`` batch id and advances its own pin only once that merge
+        is durable), so every derived table is current at every commit.
+
+        The change feed is read once per distinct consumer pin, not once
+        per consumer: consumers pinned at the same snapshot share one
+        persisted ``read_changes(pin, head, mode="cdf")`` (net-mode
+        consumers take its net projection). Grouping by pin means a shared
+        read never widens any consumer's window. Every feed is released
+        before this returns — before maintenance and the next commit —
+        also when a refresh raises; a consumer not yet registered
+        bootstraps by reading its own window."""
+        cfg = self.cfg
+        derived = [
+            # (metrics kind, consumer name, table, extra refresh_from
+            # kwargs, the count its refresh record reports), in refresh order
+            d for d in (
+                # dedup signature index: an ingest-time dedup probe always
+                # sees the current corpus
+                ("index-refresh", "sigindex", self.sigindex,
+                 {"text_col": cfg.sigindex_text_col}, "applied_events"),
+                # packed training sequences: only touched shards re-pack
+                ("packed-refresh", "packed", self.packed, {}, "applied_shards"),
+                # ANN index: only changed vectors are bucket-hashed
+                ("vecindex-refresh", "vecindex", self.vecindex,
+                 {"vec_col": cfg.vecindex_vec_col}, "applied_events"),
+                # GROUP BY rollup: pre/post images retracted and applied
+                ("aggview-refresh", "aggview", self.aggview, {}, "applied_events"),
+            )
+            if d[2] is not None
+        ]
+        if not derived:
+            return
+        from .sigindex import ChangeFeed
+
+        head = self.table.refresh()["snapshot_id"]
+        pins = self.table.consumers()
+        with contextlib.ExitStack() as held:
+            feeds = {}
+            for _, consumer, *_ in derived:
+                pin = pins.get(consumer)
+                if pin is not None and pin != head and pin not in feeds:
+                    cdf = self.table.read_changes(pin, head, mode="cdf")
+                    feeds[pin] = ChangeFeed(
+                        pin, head, held.enter_context(persisted(cdf))
+                    )
+            for kind, consumer, table, kwargs, count in derived:
+                t0 = time.time()
+                ref = table.refresh_from(
+                    self.table, consumer=consumer,
+                    feed=feeds.get(pins.get(consumer)), **kwargs,
+                )
+                self.metrics.emit({
+                    "kind": kind,
+                    "from_snapshot": ref.get("from_snapshot"),
+                    "to_snapshot": ref.get("to_snapshot"),
+                    count: ref.get(count, 0),
+                    "duration_sec": time.time() - t0,
+                })
+
+    def _maintain(self, n_applied: int) -> None:
+        """Table maintenance after the ``n_applied``-th batch of a run."""
+        if self.cfg.target_bucket_bytes:
+            # stats-driven partition evolution: bucket count doubles
+            # whenever the average bucket outgrows the target — the
+            # layout tracks table growth (64 buckets at GB scale,
+            # 10⁴ at 100 TB) with no operator intervention. Statistics
+            # are already in the manifest; no extra IO.
+            total = sum(
+                e.get("bytes", 0) for e in self.table.snapshot["manifest"]
+            )
+            nb = self.table.n_buckets
+            if total > self.cfg.target_bucket_bytes * nb:
+                new_nb = nb
+                while total > self.cfg.target_bucket_bytes * new_nb:
+                    new_nb *= 2
+                self.metrics.emit(
+                    {"kind": "rebucket", **self.table.rebucket(new_nb)}
+                )
+        if self.cfg.expire_every and n_applied % self.cfg.expire_every == 0:
+            # engine-driven retention: consumer pins and tags clamp
+            # the expiration window, so the continuously-maintained
+            # indexes/views/packed tables keep their change feeds
+            self.metrics.emit({
+                "kind": "expire",
+                **self.table.expire_snapshots(
+                    keep_last=self.cfg.retention_keep_last
+                ),
+            })
+        if self.cfg.compact_every and n_applied % self.cfg.compact_every == 0:
+            self.metrics.emit({"kind": "compact", **self.table.compact()})
+        elif self.cfg.compact_delta_files is not None:
+            # stats-driven maintenance: fold merge-on-read deltas as
+            # soon as read amplification crosses the threshold
+            n_delta = sum(
+                1 for e in self.table.snapshot["manifest"]
+                if e.get("kind") == "delta"
+            )
+            if n_delta > self.cfg.compact_delta_files:
+                self.metrics.emit({"kind": "compact", **self.table.compact()})
+
     def run(self, max_batches: int | None = None) -> dict:
         """Apply all pending ranges (resumable at any point)."""
         if self._log_from_path:
@@ -752,95 +867,16 @@ class CDCEngine:
             and len(plan) * self.table.n_buckets <= 200_000
             else {}
         )
-        for i, (lo, hi) in enumerate(plan, 1):
-            self.apply_batch(lo, hi)
-            if self.sigindex is not None:
-                # continuous dedup-index maintenance: fold the batch just
-                # committed into the signature index via the change feed —
-                # O(batch), exactly-once (sigindex.py), so an ingest-time
-                # dedup probe always sees the current corpus
-                ref = self.sigindex.refresh_from(
-                    self.table, text_col=self.cfg.sigindex_text_col
-                )
-                self.metrics.emit({
-                    "kind": "index-refresh",
-                    "from_snapshot": ref.get("from_snapshot"),
-                    "to_snapshot": ref.get("to_snapshot"),
-                    "applied_events": ref.get("applied_events", 0),
-                })
-            if self.packed is not None:
-                # continuous packed-corpus maintenance: re-pack only the
-                # shards this batch touched (packing.PackedTable) — the
-                # training-sequence table is current at every commit point
-                ref = self.packed.refresh_from(self.table)
-                self.metrics.emit({
-                    "kind": "packed-refresh",
-                    "from_snapshot": ref.get("from_snapshot"),
-                    "to_snapshot": ref.get("to_snapshot"),
-                    "applied_shards": ref.get("applied_shards", 0),
-                })
-            if self.vecindex is not None:
-                # continuous ANN-index maintenance: bucket-hash only the
-                # vectors this batch changed (vecindex.VectorIndex)
-                ref = self.vecindex.refresh_from(
-                    self.table, vec_col=self.cfg.vecindex_vec_col
-                )
-                self.metrics.emit({
-                    "kind": "vecindex-refresh",
-                    "from_snapshot": ref.get("from_snapshot"),
-                    "to_snapshot": ref.get("to_snapshot"),
-                    "applied_events": ref.get("applied_events", 0),
-                })
-            if self.aggview is not None:
-                # continuous rollup maintenance: retract-and-apply the
-                # batch's pre/post images into the materialized GROUP BY
-                # (aggview.AggView) — dashboards/mixing-weight jobs read a
-                # current aggregate without ever re-scanning the corpus
-                ref = self.aggview.refresh_from(self.table)
-                self.metrics.emit({
-                    "kind": "aggview-refresh",
-                    "from_snapshot": ref.get("from_snapshot"),
-                    "to_snapshot": ref.get("to_snapshot"),
-                    "applied_events": ref.get("applied_events", 0),
-                })
-            if self.cfg.target_bucket_bytes:
-                # stats-driven partition evolution: bucket count doubles
-                # whenever the average bucket outgrows the target — the
-                # layout tracks table growth (64 buckets at GB scale,
-                # 10⁴ at 100 TB) with no operator intervention. Statistics
-                # are already in the manifest; no extra IO.
-                total = sum(
-                    e.get("bytes", 0) for e in self.table.snapshot["manifest"]
-                )
-                nb = self.table.n_buckets
-                if total > self.cfg.target_bucket_bytes * nb:
-                    new_nb = nb
-                    while total > self.cfg.target_bucket_bytes * new_nb:
-                        new_nb *= 2
-                    self.metrics.emit(
-                        {"kind": "rebucket", **self.table.rebucket(new_nb)}
-                    )
-            if self.cfg.expire_every and i % self.cfg.expire_every == 0:
-                # engine-driven retention: consumer pins and tags clamp
-                # the expiration window, so the continuously-maintained
-                # indexes/views/packed tables keep their change feeds
-                self.metrics.emit({
-                    "kind": "expire",
-                    **self.table.expire_snapshots(
-                        keep_last=self.cfg.retention_keep_last
-                    ),
-                })
-            if self.cfg.compact_every and i % self.cfg.compact_every == 0:
-                self.metrics.emit({"kind": "compact", **self.table.compact()})
-            elif self.cfg.compact_delta_files is not None:
-                # stats-driven maintenance: fold merge-on-read deltas as
-                # soon as read amplification crosses the threshold
-                n_delta = sum(
-                    1 for e in self.table.snapshot["manifest"]
-                    if e.get("kind") == "delta"
-                )
-                if n_delta > self.cfg.compact_delta_files:
-                    self.metrics.emit({"kind": "compact", **self.table.compact()})
+        try:
+            for i, (lo, hi) in enumerate(plan, 1):
+                self.apply_batch(lo, hi)
+                self._refresh_derived()
+                self._maintain(i)
+        finally:
+            # the stats describe this run's WAL handle and plan: a later
+            # direct apply_batch must probe, never consume leftovers of
+            # ranges this run did not reach
+            self._probe_stats = {}
         return self.metrics.totals()
 
     # ---------------- preview (JiraInputPlugin.java:149-152) ----------------

@@ -45,11 +45,13 @@ JiraInputPlugin.java:130-137 `resume()` pass-through, README.md:15
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import json
 import os
 import uuid
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -193,6 +195,21 @@ def _normalize_to(df: DataFrame, target: T.StructType, *, evolved: bool) -> Data
 
         res = res.withColumn("tokens", normalize_token_arrays(F.col("tokens")))
     return res
+
+
+@contextlib.contextmanager
+def persisted(df: DataFrame):
+    """``df`` persisted (memory, spilling to disk) for the ``with`` body
+    and released — blocking, so its blocks are gone when the body's
+    caller moves on — however the body exits. For a plan that several
+    Spark actions evaluate (a merge's probe and write, a change feed
+    read by several consumers): the first action computes it, the rest
+    read the cached blocks instead of re-running the plan."""
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        yield df
+    finally:
+        df.unpersist(blocking=True)
 
 
 class IceboxTable:
@@ -791,7 +808,8 @@ class IceboxTable:
         one for downstream consumers.
 
         ``mode="net"`` (default) emits ``(_change, payload..., _seq)`` with
-        ``_change`` in {upsert, delete}. ``mode="cdf"`` emits a Delta-style
+        ``_change`` in {upsert, delete} — the ``net_of_cdf`` projection of
+        the window's change-data feed. ``mode="cdf"`` emits a Delta-style
         change-data-feed with full pre/post images: ``_change_type`` in
         {insert, update_preimage, update_postimage, delete} — an updated key
         yields TWO rows (the old payload at its old _seq, the new payload at
@@ -835,48 +853,13 @@ class IceboxTable:
                 *payload_cols, SEQ_COL
             )
 
-        key = self.key
-        old_state = visible_state(old_snap)
-        new_state = visible_state(new_snap)
-        if mode == "cdf":
-            return self._cdf(old_state, new_state, payload_cols)
-        o = old_state.select(
-            F.col(key).alias("_k"),
-            F.col(SEQ_COL).alias("_old_seq"),
-            F.struct(*payload_cols).alias("_old_payload"),
-        )
-        n = new_state.alias("n")
-        joined = n.join(o, F.col(f"n.{key}") == F.col("_k"), "full_outer")
-        # a key counts as changed when its seq DIFFERS (not only advances:
-        # a rollback restores the pre-update row at a LOWER seq, and that
-        # reversal must reach change-feed consumers — the self-heal
-        # contract) or, at an identical seq, when the payload differs (a
-        # corrected re-publish)
-        same_row = (F.col(f"n.{SEQ_COL}") == F.col("_old_seq")) & F.struct(
-            *[F.col(f"n.{c}") for c in payload_cols]
-        ).eqNullSafe(F.col("_old_payload"))
-        upserts = joined.where(
-            F.col(f"n.{key}").isNotNull()
-            & (F.col("_old_seq").isNull() | ~same_row)
-        ).select(F.lit("upsert").alias("_change"), *payload_cols, SEQ_COL)
-        # a delete's own LSN is not retained for physically-removed rows;
-        # _seq carries the last version that was visible at from_snapshot
-        deletes = joined.where(F.col(f"n.{key}").isNull()).select(
-            F.lit("delete").alias("_change"),
-            *[
-                F.col("_k").alias(key)
-                if c == key
-                else F.lit(None).cast(current[c].dataType).alias(c)
-                for c in payload_cols
-            ],
-            F.col("_old_seq").alias(SEQ_COL),
-        )
-        return upserts.unionByName(deletes)
+        cdf = self._cdf(visible_state(old_snap), visible_state(new_snap), payload_cols)
+        return cdf if mode == "cdf" else self.net_of_cdf(cdf)
 
     def _cdf(
         self, old_state: DataFrame, new_state: DataFrame, payload_cols: list[str]
     ) -> DataFrame:
-        """Change-data-feed tail of read_changes(mode="cdf"): one full outer
+        """Change-data-feed tail of read_changes (both modes): one full outer
         join on the key, then each joined row emits 0-2 typed image structs
         (pre and/or post) which are compacted and exploded — a single pass,
         no re-scan of the join per change type."""
@@ -917,6 +900,24 @@ class IceboxTable:
             F.col("_img._change_type").alias("_change_type"),
             *[F.col(f"_img.{c}").alias(c) for c in payload_cols],
             F.col(f"_img.{SEQ_COL}").alias(SEQ_COL),
+        )
+
+    def net_of_cdf(self, cdf: DataFrame) -> DataFrame:
+        """The ``mode="net"`` feed of a window, projected from its
+        ``mode="cdf"`` feed — how ``read_changes(mode="net")`` is built,
+        and how one CDF read serves net-mode consumers too: insert and
+        update_postimage become ``upsert``, delete becomes ``delete``
+        with a null payload, update_preimage is dropped. A delete's own
+        LSN is not retained for physically-removed rows, so its ``_seq``
+        is the last version visible at the window's start."""
+        key = self.key
+        is_del = F.col("_change_type") == "delete"
+        payload_cols = [c for c in cdf.columns if c not in ("_change_type", SEQ_COL)]
+        return cdf.where(F.col("_change_type") != "update_preimage").select(
+            F.when(is_del, F.lit("delete")).otherwise(F.lit("upsert")).alias("_change"),
+            *[F.col(c) if c == key else F.when(~is_del, F.col(c)).alias(c)
+              for c in payload_cols],
+            SEQ_COL,
         )
 
     @staticmethod

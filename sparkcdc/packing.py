@@ -33,8 +33,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .commitstore import CommitStore
-from .icebox import IceboxTable
-from .sigindex import IncrementalIndex
+from .icebox import IceboxTable, persisted
+from .sigindex import ChangeFeed, IncrementalIndex
 
 
 def pack_sequences(
@@ -350,12 +350,20 @@ class PackedTable(IncrementalIndex):
             )
         )
 
-    def refresh_from(self, src_table: IceboxTable, *, consumer: str = "packed") -> dict:
+    def refresh_from(
+        self,
+        src_table: IceboxTable,
+        *,
+        consumer: str = "packed",
+        feed: ChangeFeed | None = None,
+    ) -> dict:
         """Fold the source table's changes since the last sync into the
-        packed table by re-packing only the touched shards."""
+        packed table by re-packing only the touched shards. ``feed``: an
+        already-read change feed of ``src_table`` (see
+        ``IncrementalIndex._window``)."""
         self._evolve_with_source(src_table)
         from_sid, to_sid, ch = self._window(
-            src_table, consumer=consumer, mode="cdf"
+            src_table, consumer=consumer, mode="cdf", feed=feed
         )
         if ch is None:
             return {
@@ -394,19 +402,22 @@ class PackedTable(IncrementalIndex):
             batch = ups.unionByName(stale).withColumn(
                 "_seq", F.lit(to_sid).cast("long")
             )
-            m = {
-                **self.table.merge(
-                    batch,
-                    batch_id=f"{consumer}:{from_sid}->{to_sid}",
-                    seq_col="_seq",
-                    op_col="_change",
-                    delete_value="delete",
-                    fence=False,
-                    tombstones=True,
-                    mor=None,
-                ),
-                **m,
-            }
+            # persisted: the merge's probe and its write re-pack the
+            # shards once between them, not once each
+            with persisted(batch) as batch:
+                m = {
+                    **self.table.merge(
+                        batch,
+                        batch_id=f"{consumer}:{from_sid}->{to_sid}",
+                        seq_col="_seq",
+                        op_col="_change",
+                        delete_value="delete",
+                        fence=False,
+                        tombstones=True,
+                        mor=None,
+                    ),
+                    **m,
+                }
         self._advance(src_table, consumer, from_sid, to_sid)
         m = self._compact_if_needed(m)
         return {**m, "from_snapshot": from_sid, "to_snapshot": to_sid}

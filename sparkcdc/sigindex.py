@@ -31,6 +31,7 @@ document and band parameters can be re-derived without a rebuild.
 from __future__ import annotations
 
 import json
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,7 +49,7 @@ from .dedupe_docs import (
     simhash64_native,
     simhash_chunk_pairs,
 )
-from .icebox import IceboxTable
+from .icebox import IceboxTable, persisted
 
 _META_NAME = "sigindex.json"
 _SIM_META_NAME = "simindex.json"
@@ -59,6 +60,18 @@ def _index_schema(k: int, key_type: T.DataType) -> T.StructType:
         [T.StructField("doc_id", key_type)]
         + [T.StructField(f"mh_{i}", T.StringType()) for i in range(k)]
     )
+
+
+class ChangeFeed(NamedTuple):
+    """One read of a source table's change feed over ``(from_sid,
+    to_sid]``: ``cdf`` is ``read_changes(from_sid, to_sid, mode="cdf")``.
+    ``CDCEngine`` reads it once per trigger and hands it to every derived
+    table pinned at ``from_sid``; a consumer whose pin is elsewhere
+    ignores it and reads its own window."""
+
+    from_sid: int
+    to_sid: int
+    cdf: DataFrame
 
 
 class IncrementalIndex:
@@ -80,7 +93,12 @@ class IncrementalIndex:
     compact_delta_files: int = 32
 
     def _window(
-        self, src_table: IceboxTable, *, consumer: str, mode: str = "net"
+        self,
+        src_table: IceboxTable,
+        *,
+        consumer: str,
+        mode: str = "net",
+        feed: ChangeFeed | None = None,
     ) -> tuple:
         """Consumer-pinned change window: ``(from_sid, to_sid, changes)``.
 
@@ -89,7 +107,15 @@ class IncrementalIndex:
         register the consumer only AFTER its merge is durable (a crash in
         between just redoes the bootstrap; LWW makes the re-merge a
         harmless rewrite). ``mode`` is passed through to ``read_changes``
-        ("net" or "cdf"); the bootstrap slice is shaped to match."""
+        ("net" or "cdf"); the bootstrap slice is shaped to match.
+
+        ``feed``: an already-read change feed of ``src_table``. When it
+        starts at this consumer's pin it IS the window (ending at the
+        feed's ``to_sid``, even if the table moved on since) and nothing
+        is read; otherwise the window is read as without it."""
+        if feed is not None and src_table.consumers().get(consumer) == feed.from_sid:
+            ch = feed.cdf if mode == "cdf" else src_table.net_of_cdf(feed.cdf)
+            return feed.from_sid, feed.to_sid, ch
         to_sid = src_table.refresh()["snapshot_id"]
         regs = src_table.consumers()
         if consumer in regs:
@@ -129,12 +155,20 @@ class IncrementalIndex:
             return {**m, "compacted": self.table.compact()}
         return m
 
-    def _refresh(self, src_table: IceboxTable, *, consumer: str, derive) -> dict:
+    def _refresh(
+        self,
+        src_table: IceboxTable,
+        *,
+        consumer: str,
+        derive,
+        feed: ChangeFeed | None = None,
+    ) -> dict:
         """``derive(upserts) -> DataFrame`` maps changed source rows (the
         ``_change='upsert'`` slice of the feed, payload columns intact) to
         index payload rows keyed by the index key; rows it omits are
-        deleted from the index. O(changed source buckets) end to end."""
-        from_sid, to_sid, ch = self._window(src_table, consumer=consumer)
+        deleted from the index. O(changed source buckets) end to end.
+        ``feed``: see ``_window``."""
+        from_sid, to_sid, ch = self._window(src_table, consumer=consumer, feed=feed)
         if ch is None:
             return {
                 "skipped": True, "from_snapshot": from_sid, "to_snapshot": to_sid,
@@ -169,19 +203,22 @@ class IncrementalIndex:
             .unionByName(unrepresentable)
             .select(F.lit("delete").alias("_change"), key, *nulls, win_seq)
         )
-        m = self.table.merge(
-            idx_up.unionByName(removals),
-            batch_id=f"{consumer}:{from_sid}->{to_sid}",
-            seq_col="_seq",
-            op_col="_change",
-            delete_value="delete",
-            fence=False,
-            tombstones=True,
-            # cost-based: a small steady-state refresh lands as MOR deltas
-            # (O(batch) write) instead of COW-rewriting its buckets; the
-            # bootstrap (batch ≈ index) goes copy-on-write
-            mor=None,
-        )
+        # persisted: the merge's probe and its write evaluate the derived
+        # batch once between them, not once each
+        with persisted(idx_up.unionByName(removals)) as batch:
+            m = self.table.merge(
+                batch,
+                batch_id=f"{consumer}:{from_sid}->{to_sid}",
+                seq_col="_seq",
+                op_col="_change",
+                delete_value="delete",
+                fence=False,
+                tombstones=True,
+                # cost-based: a small steady-state refresh lands as MOR
+                # deltas (O(batch) write) instead of COW-rewriting its
+                # buckets; the bootstrap (batch ≈ index) goes copy-on-write
+                mor=None,
+            )
         self._advance(src_table, consumer, from_sid, to_sid)
         m = self._compact_if_needed(m)
         return {**m, "from_snapshot": from_sid, "to_snapshot": to_sid}
@@ -283,6 +320,7 @@ class SignatureIndex(IncrementalIndex):
         *,
         consumer: str = "sigindex",
         text_col: str = "text",
+        feed: ChangeFeed | None = None,
     ) -> dict:
         """Fold the doc table's changes since the last sync into the index.
 
@@ -293,11 +331,14 @@ class SignatureIndex(IncrementalIndex):
         index — unindexable docs never pollute the band space. Safe to
         re-run after a crash: the batch id is the (from, to) snapshot pair,
         so the replayed MERGE is skipped by the idempotency fence, and the
-        consumer pin is only advanced after the MERGE is durable."""
+        consumer pin is only advanced after the MERGE is durable.
+        ``feed``: an already-read change feed of ``doc_table`` (see
+        ``IncrementalIndex._window``)."""
         return self._refresh(
             doc_table,
             consumer=consumer,
             derive=lambda ups: minhash_signatures(ups, k=self.k, text_col=text_col),
+            feed=feed,
         )
 
     # ---------------- query ----------------

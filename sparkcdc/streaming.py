@@ -83,51 +83,10 @@ def run_streaming(
             )
             if n_delta > cfg.compact_delta_files:
                 engine.metrics.emit({"kind": "compact", **engine.table.compact()})
-        if engine.sigindex is not None:
-            # continuous dedup-index maintenance, streaming form: same
-            # O(batch) change-feed fold as the batch engine loop — the
-            # stream's checkpoint replays are already fenced, and a
-            # replayed epoch's refresh is a (from,to)-identical no-op
-            ref = engine.sigindex.refresh_from(
-                engine.table, text_col=cfg.sigindex_text_col
-            )
-            engine.metrics.emit({
-                "kind": "index-refresh",
-                "from_snapshot": ref.get("from_snapshot"),
-                "to_snapshot": ref.get("to_snapshot"),
-                "applied_events": ref.get("applied_events", 0),
-            })
-        if engine.packed is not None:
-            # continuous packed-corpus maintenance, streaming form: same
-            # O(touched shards) re-pack as the batch engine loop; a
-            # replayed epoch's refresh is a (from,to)-identical no-op
-            ref = engine.packed.refresh_from(engine.table)
-            engine.metrics.emit({
-                "kind": "packed-refresh",
-                "from_snapshot": ref.get("from_snapshot"),
-                "to_snapshot": ref.get("to_snapshot"),
-                "applied_shards": ref.get("applied_shards", 0),
-            })
-        if engine.vecindex is not None:
-            ref = engine.vecindex.refresh_from(
-                engine.table, vec_col=cfg.vecindex_vec_col
-            )
-            engine.metrics.emit({
-                "kind": "vecindex-refresh",
-                "from_snapshot": ref.get("from_snapshot"),
-                "to_snapshot": ref.get("to_snapshot"),
-                "applied_events": ref.get("applied_events", 0),
-            })
-        if engine.aggview is not None:
-            # continuous rollup maintenance, streaming form: a replayed
-            # epoch's refresh is a (from,to)-identical fenced no-op
-            ref = engine.aggview.refresh_from(engine.table)
-            engine.metrics.emit({
-                "kind": "aggview-refresh",
-                "from_snapshot": ref.get("from_snapshot"),
-                "to_snapshot": ref.get("to_snapshot"),
-                "applied_events": ref.get("applied_events", 0),
-            })
+        # continuous derived-table maintenance, streaming form: the same
+        # one-feed-read fold as the batch engine loop; a replayed epoch's
+        # refresh is a (from,to)-identical fenced no-op
+        engine._refresh_derived()
 
     reader = spark.readStream.schema(static.schema).option(
         "maxFilesPerTrigger", str(cfg.stream_max_files_per_trigger)

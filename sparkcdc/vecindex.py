@@ -32,7 +32,7 @@ from pyspark.sql import types as T
 from .ann import _cap_buckets, _dot, _norm, band_seed, lsh_bucket_expr, lsh_planes
 from .commitstore import CommitStore
 from .icebox import IceboxTable
-from .sigindex import IncrementalIndex
+from .sigindex import ChangeFeed, IncrementalIndex
 
 _META_NAME = "vecindex.json"
 
@@ -126,13 +126,16 @@ class VectorIndex(IncrementalIndex):
         *,
         consumer: str = "vecindex",
         vec_col: str = "embedding",
+        feed: ChangeFeed | None = None,
     ) -> dict:
         """Fold the vector table's changes since the last sync into the
         index: bucket ids are computed for ONLY the changed vectors (the
         once-per-vector hashing the per-query recompute path repeats for
         the whole corpus), null/wrong-width vectors are removed rather
         than indexed, and the MERGE + consumer pin replay exactly-once
-        (same machinery and guarantees as SignatureIndex)."""
+        (same machinery and guarantees as SignatureIndex). ``feed``: an
+        already-read change feed of ``vec_table`` (see
+        ``IncrementalIndex._window``)."""
 
         def derive(ups: DataFrame) -> DataFrame:
             ok = ups.where(
@@ -144,7 +147,7 @@ class VectorIndex(IncrementalIndex):
                 *self._bucket_cols(vec_col),
             )
 
-        return self._refresh(vec_table, consumer=consumer, derive=derive)
+        return self._refresh(vec_table, consumer=consumer, derive=derive, feed=feed)
 
     # ---------------- query ----------------
 

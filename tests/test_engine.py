@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sparkcdc import oracle
-from sparkcdc.changelog import generate_changelog, write_log_parquet
+from sparkcdc.changelog import generate_changelog, scan_slice, write_log_parquet
 from sparkcdc.config import ConfigError, JobConfig
 from sparkcdc.engine import CDCEngine
 from sparkcdc.icebox import IceboxTable
@@ -1437,3 +1437,146 @@ def test_totals_exclude_maintenance_records(spark, tmp_path):
     totals = eng.metrics.totals()
     assert totals["applied_events"] == 2_000  # not 4k/6k
     assert totals["batches"] == 2
+
+
+def test_derived_tables_share_one_change_feed_read_per_batch(
+    spark, tmp_path, monkeypatch
+):
+    """With every derived table pinned at the same snapshot, a batch reads
+    the main table's change feed ONCE for all of them; the feed (and every
+    DataFrame a refresh persisted) is released when run() returns — also
+    when a refresh raises — and the derived tables still equal their
+    one-shot recomputation."""
+    from sparkcdc.aggview import AggView
+    from sparkcdc.packing import PackedTable, pack_sequences
+
+    # four 500-event batches feeding a packed table and a GROUP BY view
+    wal_path = str(tmp_path / "dwal")
+    write_log_parquet(generate_changelog(spark, 2_000, 120, seed=31, dup_pct=5),
+                      wal_path)
+    cfg = JobConfig(
+        log_path=wal_path, table_path=str(tmp_path / "dtbl"), n_buckets=4,
+        batch_size=500, packed_path=str(tmp_path / "dpk"), packed_seq_len=32,
+        packed_tokens_col="tokens", packed_shard_col="source",
+        aggview_path=str(tmp_path / "dview"), aggview_group_cols=["source"],
+        aggview_aggs={"n_docs": ["count", None], "max_tok": ["max", "n_tok"]},
+    )
+    eng = CDCEngine(spark, cfg)
+    eng.run(max_batches=1)  # first refreshes bootstrap and register the pins
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+
+    reads = []
+    real_read = IceboxTable.read_changes
+
+    def counting_read(self, *a, **kw):
+        if self.path == eng.table.path:
+            reads.append(a)
+        return real_read(self, *a, **kw)
+
+    held_during_refresh = []
+    real_packed = PackedTable.refresh_from
+
+    def packed_spy(self, *a, **kw):
+        assert kw.get("feed") is not None
+        out = real_packed(self, *a, **kw)
+        held_during_refresh.append(persistent().size())
+        return out
+
+    monkeypatch.setattr(IceboxTable, "read_changes", counting_read)
+    monkeypatch.setattr(PackedTable, "refresh_from", packed_spy)
+    n0 = len(eng.metrics.records)
+    eng.run(max_batches=2)
+    batches = [r for r in eng.metrics.records[n0:] if r["kind"] == "batch"]
+    assert len(batches) == 2 and len(reads) == 2
+    # the shared feed was cached while the consumers read it ...
+    assert held_during_refresh and min(held_during_refresh) > before
+    # ... and is gone once run() returns
+    assert persistent().size() == before
+    for kind in ("packed-refresh", "aggview-refresh"):
+        recs = [r for r in eng.metrics.records[n0:] if r["kind"] == kind]
+        assert len(recs) == 2
+        assert all(r["duration_sec"] > 0 and r["to_snapshot"] for r in recs)
+
+    got = sorted(tuple(r) for r in eng.aggview.read().collect())
+    want = sorted(tuple(r) for r in eng.table.read().groupBy("source").agg(
+        F.count("*").alias("n_docs"), F.max("n_tok").alias("max_tok")).collect())
+    assert got == want
+    got = sorted(tuple(r) for r in eng.packed.chunks().select(
+        "shard", "seq_id", "tokens", "n_tok").collect())
+    want = sorted(tuple(r) for r in pack_sequences(
+        eng.table.read().where(F.col("source").isNotNull()), 32,
+        shard_col="source").select("source", "seq_id", "tokens", "n_tok").collect())
+    assert got == want and got
+
+    def failing_refresh(self, src_table, *, consumer="aggview", feed=None):
+        feed.cdf.count()  # the shared feed is materialized, then the refresh dies
+        raise RuntimeError("refresh died")
+
+    monkeypatch.setattr(AggView, "refresh_from", failing_refresh)
+    with pytest.raises(RuntimeError, match="refresh died"):
+        eng.run()
+    assert persistent().size() == before
+
+
+def test_probe_stats_do_not_outlive_run(spark, tmp_path, monkeypatch):
+    """Prefetched probe stats belong to the run that computed them: once
+    run() returns — normally or by an exception — a direct apply_batch of
+    a later range probes for itself instead of consuming leftovers."""
+    log_path = _mk_log(spark, tmp_path, n=1_500, docs=100, seed=17)
+    cfg = JobConfig(log_path=log_path, table_path=str(tmp_path / "tbl"),
+                    batch_size=500, n_buckets=4)
+    eng = CDCEngine(spark, cfg)
+    seen = []
+    real_merge = eng.table.merge
+
+    def merge_spy(*a, **kw):
+        seen.append(kw.get("probe_stats"))
+        return real_merge(*a, **kw)
+
+    monkeypatch.setattr(eng.table, "merge", merge_spy)
+    eng.run(max_batches=1)
+    assert len(seen) == 1 and seen[0] is not None  # prefetched
+    assert eng._probe_stats == {}
+    eng.apply_batch(500, 1_000)
+    assert seen[1] is None  # probed by the merge itself
+
+    real_apply = eng.apply_batch
+
+    def killed(lo, hi):
+        raise RuntimeError("killed before the merge")
+
+    monkeypatch.setattr(eng, "apply_batch", killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        eng.run()  # prefetched the last range, then died
+    assert eng._probe_stats == {}
+    real_apply(1_000, 1_500)
+    assert seen[2] is None
+    expected = oracle.replay(spark.read.parquet(log_path).toPandas())
+    oracle.assert_table_equal(eng.read_table().toPandas(), expected)
+
+
+def test_prefetch_probe_stats_follow_scan_slice_and_reject_off_grid(spark, tmp_path):
+    """The prefetch credits each event to the batch scan_slice puts it in,
+    fractional LSNs just above a batch bound included (a truncating cast
+    once sent LSN 0.5 to batch -1, i.e. silently to the LAST batch); an
+    event outside the plan's grid raises instead of wrapping."""
+    log = spark.createDataFrame(
+        [(0.5, "upsert", 1, "a"), (3.0, "upsert", 2, "b"),
+         (10.5, "upsert", 3, "c"), (20.0, "delete", 1, None)],
+        "seq double, op string, doc_id long, source string",
+    )
+    cfg = JobConfig(log_path="unused", table_path=str(tmp_path / "tbl"),
+                    batch_size=10, n_buckets=4)
+    eng = CDCEngine(spark, cfg, log_df=log)
+    plan = [(0, 10), (10, 20)]
+    stats = eng._prefetch_probe_stats(plan)
+    for lo, hi in plan:
+        sl = scan_slice(log, lo, hi)
+        assert sum(r["n"] for r in stats[(lo, hi)]["rows"]) == sl.count()
+        assert max(r["mx"] for r in stats[(lo, hi)]["rows"]) == (
+            sl.agg(F.max("seq")).first()[0]
+        )
+    with pytest.raises(ValueError, match="uniform grid"):
+        # one 20-wide range on a 10-wide grid: 10.5 and 20.0 map to batch 1
+        eng._prefetch_probe_stats([(0, 20)])

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import pyspark.sql.types as T
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from sparkcdc import oracle
@@ -533,6 +535,72 @@ def test_read_changes_cdf_pre_post_images(spark, table):
 
     with pytest.raises(ValueError):
         table.read_changes(s1, mode="bogus")
+
+
+_NET_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.LongType()),
+    T.StructField("source", T.StringType()),
+    T.StructField("n_tok", T.LongType()),
+])
+# (op, key, payload) events over six keys: repeats make updates, deletes
+# of live keys make deletes, a null payload exercises null-safe compares
+_EVENT = st.tuples(
+    st.sampled_from(["upsert", "upsert", "delete"]),
+    st.integers(0, 5),
+    st.none() | st.integers(0, 3),
+)
+
+
+@settings(max_examples=4, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(batches=st.lists(st.lists(_EVENT, min_size=1, max_size=6),
+                        min_size=3, max_size=3))
+@example(batches=[
+    [("upsert", 0, 1), ("upsert", 1, 1), ("upsert", 2, None)],  # inserts
+    [("upsert", 0, 2), ("delete", 1, None), ("upsert", 3, 0)],  # update, delete
+    [("upsert", 2, 3), ("delete", 3, None), ("upsert", 1, 1)],  # re-insert
+])
+def test_net_of_cdf_equals_net_read(spark, tmp_path, batches):
+    """The net projection of a window's change-data feed equals the net
+    read of the same window, and both equal a state diff of the window's
+    two snapshots, as row multisets — over windows with inserts, updates,
+    deletes and a rollback's reversal (restored rows at LOWER seqs). One
+    CDF read can therefore serve net-mode consumers."""
+    import collections
+    import uuid
+
+    t = IceboxTable.create(spark, str(tmp_path / uuid.uuid4().hex), _NET_SCHEMA,
+                           key="doc_id", n_buckets=2)
+    sids, seq = [0], 1
+    for i, batch in enumerate(batches):
+        rows = [(op, k, None if v is None else f"s{v}", v, seq + j)
+                for j, (op, k, v) in enumerate(batch)]
+        seq += len(batch)
+        t.merge(spark.createDataFrame(
+            rows, "op string, doc_id long, source string, n_tok long, seq long",
+        ), f"b{i}")
+        sids.append(t.snapshot["snapshot_id"])
+    t.rollback(sids[1])  # reverses batches 2 and 3
+    sids.append(t.snapshot["snapshot_id"])
+    states = {
+        sid: {r["doc_id"]: (r["source"], r["n_tok"], r["_seq"])
+              for r in t.read(sid, with_seq=True).collect()}
+        for sid in sids
+    }
+
+    def multiset(df):
+        return collections.Counter(tuple(r) for r in df.collect())
+
+    for a, b in [*zip(sids, sids[1:]), (sids[0], sids[3]), (sids[2], sids[4])]:
+        old, new = states[a], states[b]
+        want = collections.Counter(
+            [("upsert", k, *row) for k, row in new.items() if old.get(k) != row]
+            + [("delete", k, None, None, row[2])
+               for k, row in old.items() if k not in new]
+        )
+        cdf = t.read_changes(a, b, mode="cdf")
+        assert multiset(t.net_of_cdf(cdf)) == want, (a, b)
+        assert multiset(t.read_changes(a, b, mode="net")) == want, (a, b)
 
 
 def test_manifest_records_key_range_and_seq_stats(spark, table):

@@ -11,6 +11,7 @@ import os
 from sparkcdc.changelog import generate_changelog, write_log_parquet
 from sparkcdc.config import JobConfig
 from sparkcdc.engine import CDCEngine
+from sparkcdc.icebox import IceboxTable
 
 
 def _write_wal(spark, path, **kw):
@@ -46,15 +47,26 @@ def _rows(eng):
     return sorted(tuple(r) for r in eng.read_table().collect())
 
 
-def test_prefetch_matches_per_batch_probe(spark, tmp_path):
+def test_prefetch_matches_per_batch_probe(spark, tmp_path, monkeypatch):
     wal = os.path.join(tmp_path, "wal")
     _write_wal(spark, wal, seed=7, hot_key_pct=10, dup_pct=5)
+    handed = []
+    real_merge = IceboxTable.merge
+
+    def merge_spy(self, *args, **kwargs):
+        handed.append(kwargs.get("probe_stats"))
+        return real_merge(self, *args, **kwargs)
+
+    monkeypatch.setattr(IceboxTable, "merge", merge_spy)
     a = _run(spark, wal, os.path.join(tmp_path, "ta"))
+    a_handed = list(handed)
     b = _run(spark, wal, os.path.join(tmp_path, "tb"), disable_prefetch=True)
-    # every planned range got a prefetched entry and the per-batch probe
-    # was actually skipped in favor of it (probe time ≈ 0 means no job,
-    # but assert on the mechanism, not the clock: stats were populated)
-    assert a._probe_stats and all(e["rows"] for e in a._probe_stats.values())
+    # every planned range's merge was handed a prefetched entry, so the
+    # per-batch probe was skipped in favor of it (probe time ≈ 0 means no
+    # job, but assert on the mechanism, not the clock: stats were
+    # populated) — and the stats did not outlive the run
+    assert a_handed and all(e is not None and e["rows"] for e in a_handed)
+    assert a._probe_stats == {}
     assert _batch_metrics(a) == _batch_metrics(b)
     assert _rows(a) == _rows(b)
 
